@@ -9,21 +9,22 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * fail loudly.
   *
   * Why pluggable: the store's historical CAS (write a temp file, then
-  * `FileContext.rename(..., Rename.NONE)`) is atomic on HDFS and local
-  * filesystems, but on S3A a rename is COPY + DELETE and the
-  * no-overwrite precondition is a client-side exists() check — a TOCTOU
-  * window in which two writers that derived the same version from the
-  * same parent can BOTH believe they won, silently forking the manifest
-  * chain. The reference ships dedicated machinery for exactly this
-  * (vecgo `blobstore/s3/ddb_commit_store.go` — DynamoDB conditional put;
+  * `FileContext.rename(..., Rename.NONE)`) is atomic on HDFS (on the
+  * local FS [[CommitGuard.RenameCas]] hard-links instead), but on S3A a
+  * rename is COPY + DELETE and the no-overwrite precondition is a
+  * client-side exists() check — a TOCTOU window in which two writers
+  * that derived the same version from the same parent can BOTH believe
+  * they won, silently forking the manifest chain. The reference ships
+  * dedicated machinery for exactly this (vecgo
+  * `blobstore/s3/ddb_commit_store.go` — DynamoDB conditional put;
   * `blobstore/s3/express_store.go` — S3 conditional PUT): the commit
   * point must be a true compare-and-set on the backing store.
   *
   * Two implementations:
   *   - [[CommitGuard.RenameCas]] (default on `file`/`hdfs`/`viewfs`):
-  *     temp write + atomic no-overwrite rename. The temp file keeps a
-  *     torn MANIFEST body from ever appearing at the final name on a
-  *     crash.
+  *     temp write + atomic no-overwrite rename (a hard link on the
+  *     local FS). The temp file keeps a torn MANIFEST body from ever
+  *     appearing at the final name on a crash.
   *   - [[CommitGuard.ConditionalCreate]] (default on object-store
   *     schemes): `create(dest, overwrite = false)` + write + close, with
   *     every already-exists/precondition failure surfaced as the loss
@@ -32,8 +33,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     to a single `PutObject If-None-Match: *` — an atomic server-side
   *     CAS, and since an S3 PUT is all-or-nothing there is no torn-body
   *     window either. On filesystems whose exclusive create is itself
-  *     checked server-side (HDFS) this is equally safe; only on stores
-  *     where create(overwrite=false) degrades to a client-side
+  *     checked server-side (HDFS) this is equally safe, even though the
+  *     file is visible, partial, between create() and close(): the guard
+  *     does not [[CommitGuard.publishesWhole]], so [[SnapshotStore.commit]]
+  *     treats any object at its target version as a lost race and never
+  *     deletes a winner's manifest that is still being written. Only on
+  *     stores where create(overwrite=false) degrades to a client-side
   *     exists-check would it inherit the TOCTOU — which is why the
   *     rename variant stays the default where rename IS atomic.
   *
@@ -57,25 +62,50 @@ trait CommitGuard {
   def publishExclusive(fs: FileSystem, conf: Configuration, root: Path,
       dest: Path, bytes: Array[Byte]): Unit
 
+  /** True when `dest` never holds a partial body: the bytes appear at
+    * the final name whole, in one atomic step. Only then can an
+    * unparsable object at `dest` be a crashed commit's torn leftover
+    * that [[SnapshotStore.commit]] may clear; otherwise it may be
+    * another writer's publication still in flight.
+    */
+  def publishesWhole: Boolean
+
   def name: String
 }
 
 object CommitGuard {
 
-  /** Temp-file write + atomic `Rename.NONE` — the HDFS/local-FS CAS. */
+  /** Temp-file write + atomic no-overwrite publish — the HDFS/local-FS
+    * CAS. On HDFS `Rename.NONE` is checked by the NameNode. On the local
+    * `file` scheme it is not: Hadoop's local rename checks exists() on
+    * the client and then calls `File.renameTo`, which replaces the
+    * target, and the checksum sidecar moves in a second rename. Two
+    * writers could both publish the same version, or leave one's body
+    * paired with the other's checksum. Locally the temp file is therefore
+    * hard-linked to `dest` (`link(2)` fails atomically when `dest`
+    * exists) and then removed.
+    */
   object RenameCas extends CommitGuard {
     val name = "rename-cas"
+    val publishesWhole = true
     def publishExclusive(fs: FileSystem, conf: Configuration, root: Path,
         dest: Path, bytes: Array[Byte]): Unit = {
       val tmp = new Path(root,
         s".${dest.getName}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
       val out = fs.create(tmp, true)
       try out.write(bytes) finally out.close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        fs.makeQualified(root).toUri, conf)
-      try fc.rename(fs.makeQualified(tmp), fs.makeQualified(dest),
-        org.apache.hadoop.fs.Options.Rename.NONE)
-      catch { case e: Throwable =>
+      def local(p: Path) = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
+      try {
+        if (fs.getUri.getScheme == "file") {
+          java.nio.file.Files.createLink(local(dest), local(tmp))
+          fs.delete(tmp, false)
+        } else {
+          val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+            fs.makeQualified(root).toUri, conf)
+          fc.rename(fs.makeQualified(tmp), fs.makeQualified(dest),
+            org.apache.hadoop.fs.Options.Rename.NONE)
+        }
+      } catch { case e: Throwable =>
         try fs.delete(tmp, false)
         catch { case scala.util.control.NonFatal(_) => () }
         throw e
@@ -91,6 +121,9 @@ object CommitGuard {
     */
   object ConditionalCreate extends CommitGuard {
     val name = "conditional-create"
+    // on HDFS (and the s3sim emulation) the object is visible from
+    // create() until close(); only a real S3 PUT is all-or-nothing
+    val publishesWhole = false
     def publishExclusive(fs: FileSystem, conf: Configuration, root: Path,
         dest: Path, bytes: Array[Byte]): Unit = {
       warnIfClientSideCas(fs, root)

@@ -19,7 +19,13 @@ import org.apache.hadoop.util.Progressable
   *   - `create(path, overwrite = false)` of a `MANIFEST-*` file is an
   *     ATOMIC conditional put (a JVM-wide lock emulating S3's
   *     server-side `If-None-Match: *`), which is what the
-  *     conditional-create guard relies on.
+  *     conditional-create guard relies on. Both public `create`
+  *     overloads take this path: Hadoop dispatches
+  *     `FileSystem.create(path, overwrite)` to the 6-argument
+  *     `create(Path, Boolean, Int, Short, Long, Progressable)`, which
+  *     `RawLocalFileSystem` implements without going through the
+  *     `FsPermission` overload. Unlike a real S3 PUT (and like HDFS), the
+  *     object is visible, empty or partial, from `create` until `close`.
   *
   * Optional barriers let a spec hold two racing writers at the commit
   * point until both have derived the same parent version — turning a
@@ -58,24 +64,29 @@ class S3SimFileSystem extends RawLocalFileSystem {
     }
   }
 
+  // `FileSystem.create(path, overwrite)` dispatches here, not to the
+  // FsPermission overload below — both must take the conditional put
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream =
+    conditionalPut(f, overwrite)(super.create(f, overwrite, bufferSize,
+      replication, blockSize, progress))
 
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream = {
-    System.err.println(s"[s3sim-dbg] create: $f overwrite=$overwrite thread=${Thread.currentThread().getName}")
-    if (overwrite || !f.getName.startsWith("MANIFEST-"))
-      return super.create(f, permission, overwrite, bufferSize, replication,
-        blockSize, progress)
-    if (inBarrierScope(f)) {
-      System.err.println(s"[s3sim-dbg] create barrier: $f thread=${Thread.currentThread().getName}")
-      awaitQuietly(manifestCreateBarrier)
-    }
+      progress: Progressable): FSDataOutputStream =
+    conditionalPut(f, overwrite)(super.create(f, permission, overwrite,
+      bufferSize, replication, blockSize, progress))
+
+  private def conditionalPut(f: Path, overwrite: Boolean)(
+      put: => FSDataOutputStream): FSDataOutputStream = {
+    if (overwrite || !f.getName.startsWith("MANIFEST-")) return put
+    if (inBarrierScope(f)) awaitQuietly(manifestCreateBarrier)
     conditionalPutLock.synchronized {
       if (exists(f))
         throw new org.apache.hadoop.fs.FileAlreadyExistsException(
           s"$f: object exists (emulated If-None-Match precondition)")
-      super.create(f, permission, overwrite, bufferSize, replication,
-        blockSize, progress)
+      put
     }
   }
 }
@@ -87,6 +98,12 @@ object S3SimFileSystem {
 
   @volatile var manifestRenameBarrier: Option[java.util.concurrent.CyclicBarrier] = None
   @volatile var manifestCreateBarrier: Option[java.util.concurrent.CyclicBarrier] = None
+
+  /** Writers that have reached an armed racing barrier. A spec resets it
+    * before a race and checks it after, so a barrier that stops engaging
+    * fails loudly instead of turning the schedule back into a free race.
+    */
+  val barrierArrivals = new java.util.concurrent.atomic.AtomicInteger
 
   /** Barrier SCOPE: only manifest ops under this path trip the racing
     * barriers. s3sim is a shared fixture now (any spec may run a store
@@ -104,6 +121,7 @@ object S3SimFileSystem {
   private def awaitQuietly(
       b: Option[java.util.concurrent.CyclicBarrier]): Unit =
     b.foreach { bar =>
+      barrierArrivals.incrementAndGet()
       // generous: under a loaded box the second writer can take tens of
       // seconds to reach the commit point; a timeout here silently breaks
       // the deterministic schedule (the race degenerates to sequential)

@@ -244,6 +244,14 @@ final class SnapshotStore(spark: SparkSession, val root: String,
     * are uniquely named and unreferenced; [[cleanOrphans]] reclaims
     * them) instead of silently last-writer-winning the CURRENT pointer.
     * Safe retry: re-read the head and re-apply the mutation.
+    *
+    * An object already at the target version is a loss, with one
+    * exception: under a guard that [[CommitGuard.publishesWhole]]
+    * (rename-CAS) an UNPARSABLE one can only be a crashed commit's torn
+    * leftover, so it is cleared and the version contended. Under any
+    * other guard (conditional-create) it may be another writer's
+    * manifest between its exclusive create and its close; deleting it
+    * would silently lose that writer's commit, so it is never deleted.
     */
   private[store] def commit(m: Manifest): Unit = {
     val f = fs
@@ -255,9 +263,11 @@ final class SnapshotStore(spark: SparkSession, val root: String,
     if (f.exists(mp)) {
       // a PARSABLE manifest at this version is a completed commit → we
       // lost the race. An unparsable one is a torn leftover of a crashed
-      // commit (the case torn-head recovery re-commits over) — clear it
-      // and contend for the publication like any other writer.
-      if (manifest(m.version).isDefined) lost()
+      // commit only where the guard never exposes a partial body at the
+      // final name: clear it and contend like any other writer (the case
+      // torn-head recovery re-commits over). Elsewhere it may be the
+      // winner's manifest still being written → we lost, delete nothing.
+      if (!guard.publishesWhole || manifest(m.version).isDefined) lost()
       f.delete(mp, false)
     }
     try guard.publishExclusive(f, spark.sparkContext.hadoopConfiguration,

@@ -67,6 +67,7 @@ class CommitGuardSpec extends AnyFunSuite {
     * (thread outcomes, the winning store). Barrier-armed by the caller.
     */
   private def race(root: String, guard: CommitGuard): (Seq[Option[Throwable]], SnapshotStore) = {
+    S3SimFileSystem.barrierArrivals.set(0)
     val a = new SnapshotStore(spark, root, commitGuard = guard)
     val b = new SnapshotStore(spark, root, commitGuard = guard)
     val pool = Executors.newFixedThreadPool(2)
@@ -97,6 +98,8 @@ class CommitGuardSpec extends AnyFunSuite {
     S3SimFileSystem.manifestRenameBarrier = Some(new CyclicBarrier(2))
     try {
       val (outcomes, after) = race(root, CommitGuard.RenameCas)
+      assert(S3SimFileSystem.barrierArrivals.get === 2,
+        "both writers must reach the rename barrier")
       // the defect: NEITHER writer learns it lost
       assert(outcomes.forall(_.isEmpty),
         s"expected the silent fork, got $outcomes")
@@ -124,6 +127,8 @@ class CommitGuardSpec extends AnyFunSuite {
     S3SimFileSystem.manifestCreateBarrier = Some(new CyclicBarrier(2))
     try {
       val (outcomes, after) = race(root, CommitGuard.ConditionalCreate)
+      assert(S3SimFileSystem.barrierArrivals.get === 2,
+        "both writers must reach the create barrier")
       val losers = outcomes.flatten
       assert(losers.size === 1, s"want exactly one loser, got $outcomes")
       assert(losers.head.isInstanceOf[java.util.ConcurrentModificationException],
@@ -142,6 +147,34 @@ class CommitGuardSpec extends AnyFunSuite {
       S3SimFileSystem.manifestCreateBarrier = None
       S3SimFileSystem.barrierRoot = null
     }
+  }
+
+  test("conditional-create: a same-version commit never deletes another " +
+      "writer's in-flight manifest — it loses loudly and the first " +
+      "writer's body is what survives its close") {
+    val root = s3simRoot()
+    new SnapshotStore(spark, root, commitGuard = CommitGuard.ConditionalCreate)
+      .insert(Seq((1L, "seed")).toDF("id", "v")) // version 0
+    val mp = new Path(root, "MANIFEST-000001.json")
+    val fs = mp.getFileSystem(hconf)
+    // writer A has won the exclusive create of version 1 and is still
+    // writing: the object is visible, its body partial and unparsable
+    val body = "writer A's version-1 manifest".getBytes("UTF-8")
+    val a = fs.create(mp, false)
+    a.write(body, 0, 8)
+    a.hflush()
+    val b = new SnapshotStore(spark, root,
+      commitGuard = CommitGuard.ConditionalCreate)
+    intercept[java.util.ConcurrentModificationException] {
+      b.insert(Seq((2L, "b")).toDF("id", "v"))
+    }
+    assert(fs.exists(mp), "writer B deleted writer A's in-flight manifest")
+    a.write(body, 8, body.length - 8)
+    a.close()
+    val in = fs.open(mp)
+    val readBack = try in.readAllBytes() finally in.close()
+    assert(new String(readBack, "UTF-8") === new String(body, "UTF-8"),
+      "writer A's commit was lost")
   }
 
   test("cloneAt onto an emulated-S3 root publishes through the " +
